@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import cut_lineage, iterate
+from ..plans.superstep import cut_lineage, iterate, superstep_state_side
 from .builders import symmetrized, vertices
 
 # Measurement hook (tools/ab_visited_window.py): True restores the old
@@ -61,60 +61,50 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """DataFrame[v, evcent], L-inf normalized (max = 1).
 
-    ONE driver action per superstep (pagerank.py's discipline): the state
-    carries the UN-normalized inflow ``y_i`` plus the previous normalized
-    vector ``x_{i-1}``; the L-inf scale ``m_i = max(y_i)`` lives on the
-    driver and is applied lazily as a ``lit`` expression, so normalization
-    costs no job.  The single per-superstep aggregate returns
-    ``(max(y_i), L1(x_{i-1} - x_{i-2}), rows)`` — the L1 change is EXACT
-    but lagged one superstep (both scales in ``|y_{i-1}/m_{i-1} -
-    x_{i-2}|`` are known by then), so a tolerance stop detects convergence
-    one superstep late and returns the converged vector ``x_{i-1}``
-    itself, bit-identical to the eager-delta formulation."""
+    ONE driver action per superstep (``plans.superstep.iterate``'s
+    contract): the state carries the UN-normalized inflow ``y_i`` plus
+    the previous normalized vector ``x_{i-1}``; the L-inf scale ``m_i =
+    max(y_i)`` is observed on superstep i's own action and applied
+    lazily as a ``lit`` expression in superstep i+1, so normalization
+    costs no job.  The observed ``L1(x_{i-1} - x_{i-2})`` is EXACT but
+    lagged one superstep (both scales in ``|y_{i-1}/m_{i-1} - x_{i-2}|``
+    are known by then), so a tolerance stop detects convergence one
+    superstep late and returns the converged vector ``x_{i-1}`` itself,
+    bit-identical to the eager-delta formulation."""
     adj = symmetrized(edges).repartition("src").persist()
-    adj.count()
     n_row = vertices(edges).count()
     state0 = vertices(edges).select(
         "v",
         F.lit(1.0 / n_row).alias("y"),
         F.lit(1.0 / n_row).alias("xprev"),
     )
-    scale = {"m": 1.0}  # x_0 = y_0 / 1
 
-    def step(state: DataFrame, i: int):
-        m = scale["m"]
-        msgs = adj.join(state, adj.src == state.v).select(
+    def step(state: DataFrame, i: int, observed: dict | None):
+        m = 1.0 if observed is None else float(observed["m"])  # x_0 = y_0
+        src = superstep_state_side(
+            state.select("v", "y"), None if observed is None else observed["rows"]
+        )
+        msgs = adj.join(src, adj.src == src.v).select(
             F.col("dst").alias("v"), (F.col("y") / F.lit(m)).alias("x")
         )
         inflow = msgs.groupBy("v").agg(F.sum("x").alias("ynew"))
-        new_state = (
-            state.join(inflow, "v", "left")
-            .select(
-                "v",
-                F.coalesce("ynew", F.lit(0.0)).alias("y"),
-                (F.col("y") / F.lit(m)).alias("xprev"),
-                F.abs(F.col("y") / F.lit(m) - F.col("xprev")).alias("d"),
-            )
-            .persist()
+        new_state = state.join(inflow, "v", "left").select(
+            "v",
+            F.coalesce("ynew", F.lit(0.0)).alias("y"),
+            (F.col("y") / F.lit(m)).alias("xprev"),
+            F.abs(F.col("y") / F.lit(m) - F.col("xprev")).alias("d"),
         )
-        agg = new_state.agg(
-            F.max("y").alias("m"),
-            F.sum("d").alias("l1"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        scale["m"] = float(agg["m"])
         # first superstep has no previous change to report
-        delta = float("inf") if i == 0 else float(agg["l1"])
-        return (new_state, delta, int(agg["rows"]))
+        l1 = F.lit(float("inf")) if i == 0 else F.sum("d")
+        return new_state, {"delta": l1, "m": F.max("y")}
 
     result = iterate(state0, step, max_iter=max_iter, tol=eps)
     if result.converged:
         # stop fired on the lagged delta: xprev IS the converged vector
         out = result.state.select("v", F.col("xprev").alias("evcent"))
     else:
-        out = result.state.select(
-            "v", (F.col("y") / F.lit(scale["m"])).alias("evcent")
-        )
+        m = float(result.observed["m"]) if result.observed else 1.0
+        out = result.state.select("v", (F.col("y") / F.lit(m)).alias("evcent"))
     adj.unpersist()
     return out
 

@@ -26,19 +26,12 @@ from pyspark.sql import functions as F
 
 from ..plans.superstep import (
     CheckpointManager,
-    SuperstepResult,
     cut_lineage,
     iterate,
     release,
     superstep_state_side,
 )
 from .builders import symmetrized, vertices
-
-# Measurement hook (tools/ab_trim_shape.py): True restores the old
-# two-anti-joins + union + distinct shape for the SCC trim layer's
-# trivial-vertex set; the shipped False path computes the set-identical
-# remaining \ (srcs ∩ dsts) with one semi-join + one anti-join.
-_TRIM_UNION_SHAPE = False
 
 
 def connected_components(
@@ -52,7 +45,6 @@ def connected_components(
     not occur — every vertex has at least one edge by construction)."""
     spark = edges.sparkSession
     adj = symmetrized(edges).repartition("src").persist()
-    adj.count()
 
     start_iteration = 0
     state0 = None
@@ -65,38 +57,37 @@ def connected_components(
         # frontier flag: everything active initially
         state0 = labels.withColumn("active", F.lit(True))
 
-    # NOTE: unlike the cut-leaf-state supersteps (coreness/HITS/ANF/...),
-    # this state is persist()ed, so the planner sees REAL size stats for
-    # the frontier filter and already broadcasts/shuffles it correctly on
-    # its own — a forced strategy hint was A/B'd (1x and 3x fixtures) to
-    # a tie/slight loss and removed.
-    def step(state: DataFrame, i: int):
-        frontier = state.filter("active").select("v", "component")
-        msgs = (
-            adj.join(frontier, adj.src == frontier.v)
-            .select(F.col("dst").alias("v"), "component")
+    # ONE state exchange per superstep: the state's own (v, cur) rows are
+    # unioned into the frontier's (v, cand) messages and grouped by v,
+    # instead of joining the state back onto the message minimum.  The
+    # frontier side of the adjacency join is picked from the previous
+    # round's observed changed count — exactly the frontier's size.
+    def step(state: DataFrame, i: int, observed: dict | None):
+        frontier = superstep_state_side(
+            state.filter("active").select("v", "component"),
+            None if observed is None else int(observed["delta"]),
         )
-        best = msgs.groupBy("v").agg(F.min("component").alias("cand"))
-        new_state = (
-            state.join(best, "v", "left")
-            .select(
-                "v",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("cand"), F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce(F.col("cand"), F.col("component"))
-                    < F.col("component")
-                ).alias("active"),
-            )
+        msgs = adj.join(frontier, adj.src == frontier.v).select(
+            F.col("dst").alias("v"),
+            F.col("component").alias("cand"),
+            F.lit(None).cast("long").alias("cur"),
         )
-        # single action per superstep: materialize + (changed, rows)
-        new_state = new_state.persist()
-        agg = new_state.agg(
-            F.sum(F.col("active").cast("long")).alias("changed"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        return new_state, float(agg["changed"] or 0), int(agg["rows"])
+        own = state.select(
+            "v",
+            F.lit(None).cast("long").alias("cand"),
+            F.col("component").alias("cur"),
+        )
+        best = (
+            msgs.unionByName(own)
+            .groupBy("v")
+            .agg(F.min("cand").alias("cand"), F.min("cur").alias("cur"))
+        )
+        new_state = best.select(
+            "v",
+            F.least(F.col("cur"), F.coalesce("cand", "cur")).alias("component"),
+            (F.coalesce("cand", "cur") < F.col("cur")).alias("active"),
+        )
+        return new_state, {"delta": F.sum(F.col("active").cast("long"))}
 
     result = iterate(
         state0,
@@ -439,24 +430,16 @@ def strongly_connected_components(
         while trim and n_left > 0:
             srcs = cur.select(F.col("src").alias("v")).distinct()
             dsts = cur.select(F.col("dst").alias("v")).distinct()
-            if _TRIM_UNION_SHAPE:
-                trivial = cut_lineage(
-                    remaining.join(srcs, "v", "left_anti")
-                    .union(remaining.join(dsts, "v", "left_anti"))
-                    .distinct(),
-                    eager=False,
-                )
-            else:
-                # (remaining \ srcs) ∪ (remaining \ dsts) ==
-                # remaining \ (srcs ∩ dsts): one semi-join (both distinct
-                # outputs are already hash(v)-partitioned, so it adds no
-                # exchange) plus one anti-join replaces two anti-joins +
-                # union + distinct — one fewer pass over `remaining` and
-                # one fewer exchange per trim layer
-                both = srcs.join(dsts, "v", "left_semi")
-                trivial = cut_lineage(
-                    remaining.join(both, "v", "left_anti"), eager=False
-                )
+            # (remaining \ srcs) ∪ (remaining \ dsts) ==
+            # remaining \ (srcs ∩ dsts): one semi-join (both distinct
+            # outputs are already hash(v)-partitioned, so it adds no
+            # exchange) plus one anti-join replaces two anti-joins + union
+            # + distinct — one fewer pass over `remaining` and one fewer
+            # exchange per trim layer (BENCH/AB_TRIM_SHAPE_r07.txt)
+            both = srcs.join(dsts, "v", "left_semi")
+            trivial = cut_lineage(
+                remaining.join(both, "v", "left_anti"), eager=False
+            )
             k = trivial.count()
             # trivial is now a materialized leaf: the PREVIOUS layer's lazy
             # remaining/cur cuts were computed (and checkpointed) by this

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.superstep import CheckpointManager, iterate
+from ..plans.superstep import CheckpointManager, iterate, superstep_state_side
 from .builders import symmetrized, vertices
 
 
@@ -32,17 +32,19 @@ def label_propagation(
 ):
     """Returns DataFrame[v: long, label: long]."""
     adj = symmetrized(edges).repartition("src").persist()
-    adj.count()
     state0 = vertices(edges).select(
         "v", F.col("v").alias("label"), F.lit(False).alias("_chg")
     )
 
-    # NOTE: the state here is persist()ed (real size stats), so the
-    # planner already picks the join strategy correctly — a forced hint
-    # was A/B'd to a tie and removed (cf. superstep_state_side, which is
-    # for stats-free cut-leaf states only).
-    def step(state: DataFrame, i: int):
-        msgs = adj.join(state, adj.src == state.v).select(
+    def step(state: DataFrame, i: int, observed: dict | None):
+        # after round 1 the state is a lineage-free leaf (a stats-free cut
+        # or a parquet reread): pick its side of the adjacency join from
+        # the observed row count
+        src = superstep_state_side(
+            state.select("v", "label"),
+            None if observed is None else observed["rows"],
+        )
+        msgs = adj.join(src, adj.src == src.v).select(
             F.col("dst").alias("v"), "label"
         )
         counts = msgs.groupBy("v", "label").agg(F.count("*").alias("cnt"))
@@ -53,17 +55,11 @@ def label_propagation(
             ).alias("label")
         )
         prev = state.select("v", F.col("label").alias("old_label"))
+        label = F.coalesce(F.col("label"), F.col("old_label"))
         new_state = prev.join(new_labels, "v", "left").select(
-            "v", F.coalesce(F.col("label"), F.col("old_label")).alias("label"),
-            (F.coalesce(F.col("label"), F.col("old_label")) != F.col("old_label")).alias("_chg"),
-        ).persist()
-        # single action: (changed, rows) in one aggregate; _chg stays in the
-        # state so the persisted DataFrame is the one the loop manages
-        agg = new_state.agg(
-            F.sum(F.col("_chg").cast("long")).alias("changed"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        return new_state, float(agg["changed"]), int(agg["rows"])
+            "v", label.alias("label"), (label != F.col("old_label")).alias("_chg")
+        )
+        return new_state, {"delta": F.sum(F.col("_chg").cast("long"))}
 
     result = iterate(
         state0, step, max_iter=max_iter, tol=0.0, checkpointer=checkpointer

@@ -6,14 +6,22 @@ weights, dangling-mass redistribution, and L1 convergence (Σ|Δ| < tol).
 Oracle: ``kernels.pagerank_numpy`` (allclose 1e-6 at convergence).
 
 Physical design:
-* ONE Spark action per superstep.  The state carries a ``dangling`` flag,
-  and the single per-superstep aggregate returns (rows, L1 delta, next
-  dangling mass) together — naive formulations spend 2-3 extra jobs per
-  superstep on scalar lookups, and at cluster scale fixed job overhead is
-  what caps scaling efficiency.
+* ONE Spark action per superstep, and no collect at all.  The state
+  carries a ``dangling`` flag, and the step hands ``plans.superstep
+  .iterate`` two aggregates — the L1 delta and the next dangling mass —
+  which the loop observes on the superstep's own checkpoint write (or
+  lineage cut) and feeds back into the next step's plan as a literal.
+  Setup is one aggregate over the cached ``static`` table (n, dangling
+  count).  At benchmark sizes fixed per-job overhead is what a round
+  costs, so this is the dominant term.
 * The ``links`` table (edge + precomputed 1/out_degree weight) is
-  repartitioned on ``src`` and persisted once; every superstep shuffles
-  only the rank vector.
+  repartitioned on ``src`` and persisted once; ``static`` (v, dangling
+  [, p]) on ``v``.  Each superstep has ONE state exchange: the previous
+  state's own (v, 0, rank0) rows are unioned into the contribution
+  aggregate grouped by ``v``, whose output joins ``static``
+  co-partitioned — the state is never joined back in.  The rank side of
+  the ``links`` join is chosen by ``superstep_state_side`` from the
+  known vertex count.
 * Two aggregation strategies, selectable per call:
   - ``impl="sql"``: ``links ⋈ ranks → groupBy(dst).sum`` — Catalyst gives
     map-side partial aggregation; AQE splits skewed reducers.
@@ -30,15 +38,15 @@ Physical design:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..plans.superstep import CheckpointManager, iterate
-from .builders import vertices
+from ..plans.superstep import CheckpointManager, iterate, superstep_state_side
 
 
 def _csr_partial_sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -90,7 +98,7 @@ def pagerank(
     vector becomes p(v) = 1/|seeds| on seeds, 0 elsewhere: ranks start at
     p, the (1-d) restart and the dangling redistribution both flow to p
     instead of uniform 1/n.  Plan shape is unchanged — p rides in the
-    cached ``static`` table the per-superstep left join already touches,
+    cached ``static`` table the per-superstep join already touches,
     so personalization costs zero extra shuffles per superstep.
 
     ``weight_col``: optional edge-weight column for WEIGHTED PageRank —
@@ -100,177 +108,161 @@ def pagerank(
     precompute changes; the superstep plan is identical.
 
     ``block_size`` chains that many supersteps lazily into ONE Spark
-    action (the dangling mass is folded in as an in-plan one-row
-    aggregate, so no scalar collect is needed between sub-iterations) and
-    checks convergence once per block on the L1 distance across the whole
-    block — a conservative criterion, since per-step deltas shrink
-    monotonically.  Iterate values are bit-identical to block_size=1; the
-    only trade is convergence-check granularity against per-superstep
-    fixed job cost, which is what limits scaling efficiency on fast
-    supersteps.
+    action and checks convergence once per block on the L1 distance
+    across the whole block — a conservative criterion, since per-step
+    deltas shrink monotonically.  Iterate values are bit-identical to
+    block_size=1; the only trade is convergence-check granularity
+    against per-superstep fixed job cost.  Graphs with dangling
+    vertices run one superstep per block (the dangling mass of a lazy
+    sub-iteration would read its predecessor twice).
     """
-    verts = vertices(edges).persist()
-    n = verts.count()
+    # links (src, dst, w): each edge with its 1/out_degree (or weight /
+    # Σ out-weights) factor, hash-partitioned on src and cached; the
+    # out-degree is a window over those same src partitions, so building
+    # links costs one exchange
+    out_w = F.lit(1.0) if weight_col is None else F.col(weight_col)
+    links = (
+        edges.repartition("src")
+        .select(
+            "src",
+            "dst",
+            (out_w / F.sum(out_w).over(Window.partitionBy("src"))).alias("w"),
+        )
+        .persist()
+    )
 
-    pvec = None
-    if teleport is not None:
+    # static per-vertex attributes (v, dangling[, p]), cached once and
+    # hash-partitioned on v by their own aggregate (a cached plan keeps
+    # its output partitioning) — the anchor every superstep's mass
+    # aggregate joins without re-exchanging, and the one that keeps a
+    # chained block LINEAR (each lazy sub-iteration references the
+    # previous one once)
+    static = (
+        links.select(F.col("src").alias("v"), F.lit(False).alias("dangling"))
+        .union(edges.select(F.col("dst").alias("v"), F.lit(True).alias("dangling")))
+        .groupBy("v")
+        .agg(F.min("dangling").alias("dangling"))
+    )
+    personalized = teleport is not None
+    if personalized:
         seeds = teleport.select("v").distinct()
         ns = seeds.count()
         if ns == 0:
             raise ValueError("personalized pagerank: teleport set is empty")
-        pvec = verts.join(
-            seeds.withColumn("s", F.lit(1)), "v", "left"
-        ).select(
+        static = static.join(seeds.withColumn("s", F.lit(1)), "v", "left").select(
             "v",
+            "dangling",
             F.when(F.col("s").isNotNull(), F.lit(1.0 / ns))
             .otherwise(F.lit(0.0))
             .alias("p"),
         )
-
-    if weight_col is None:
-        out_deg = edges.groupBy("src").agg(F.count("*").alias("out_degree"))
-        edge_w = F.lit(1.0) / F.col("out_degree")
-    else:
-        out_deg = edges.groupBy("src").agg(
-            F.sum(weight_col).alias("out_degree")
-        )
-        edge_w = F.col(weight_col) / F.col("out_degree")
-    links = (
-        edges.join(out_deg, "src")
-        .select("src", "dst", edge_w.alias("w"))
-        .repartition("src")
-        .persist()
-    )
-    links.count()
+    static = static.persist()
+    # the one setup action: n, the dangling count, and the starting
+    # dangling mass of a personalized run (it also materializes static)
+    n, n_dangling, dangling_p = static.agg(
+        F.count("*"),
+        F.count_if("dangling"),
+        F.sum(F.when(F.col("dangling"), F.col("p") if personalized else 0.0)),
+    ).first()
 
     # state: (v, rank, delta, dangling); the dangling flag makes the next
-    # superstep's dangling mass a by-product of this superstep's aggregate
+    # superstep's dangling mass one of this superstep's observed aggregates
     start_iteration = 0
     state0 = None
     if checkpointer is not None:
         found = checkpointer.load_latest(edges.sparkSession)
         if found is not None:
             start_iteration, state0 = found
+            dangling_mass0 = state0.agg(
+                F.sum(F.when(F.col("dangling"), F.col("rank")))
+            ).first()[0] or 0.0
     if state0 is None:
-        state0 = verts.join(
-            out_deg.select(F.col("src").alias("v"), F.lit(False).alias("nd")),
+        state0 = static.select(
             "v",
-            "left",
-        )
-        if pvec is not None:
-            state0 = state0.join(pvec, "v")
-        state0 = state0.select(
-            "v",
-            (F.lit(1.0 / n) if pvec is None else F.col("p")).alias("rank"),
+            (F.col("p") if personalized else F.lit(1.0 / n)).alias("rank"),
             F.lit(1.0).alias("delta"),
-            F.col("nd").isNull().alias("dangling"),
+            "dangling",
         )
-    state0 = state0.persist()
-    # one setup aggregate: dangling mass AND the dangling-existence flag
-    # (formerly a separate limit(1).count() against the static cache)
-    row0 = state0.agg(
-        F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dm"),
-        F.max(F.col("dangling").cast("int")).alias("hd"),
-    ).collect()[0]
-    dangling_mass = row0["dm"] or 0.0
-    has_dangling = bool(row0["hd"])
-    carried = {"dangling_mass": dangling_mass}
+        dangling_mass0 = (dangling_p or 0.0) if personalized else n_dangling / n
 
-    # rank-vector join strategy: broadcasting n rank rows is a serial
-    # driver-side build per superstep; above ~100k vertices a shuffle-hash
-    # join (ranks shuffle in parallel; cached links keep their partitioning)
-    # measured ~20% faster per superstep and removes the Amdahl term
-    use_shuffle_hash = join_strategy == "shuffle_hash" or (
-        join_strategy == "auto" and n > 100_000
-    )
-
-    def _one_superstep(cur: DataFrame, dangling_mass_col):
-        """One lazy superstep: cur(v, rank) -> (v, rank).  The full-vertex
-        left join goes against the *cached* static table, so the previous
-        lazy state is referenced exactly once (via the contribution sum) —
-        the property that keeps chained blocks linear."""
+    def _one_superstep(cur: DataFrame, start: DataFrame, dangling_mass: float):
+        """One lazy superstep: cur(v, rank) -> (v, rank, rank0, dangling),
+        with rank0 the block-start rank.  ONE state exchange: the block
+        start's own (v, 0, rank0) rows are unioned into the contribution
+        aggregate, grouped by v, whose output joins the cached static
+        table co-partitioned — the previous lazy state is referenced
+        exactly once, via its contributions."""
         ranks = cur.select("v", "rank")
-        if use_shuffle_hash:
+        if join_strategy == "shuffle_hash":
             ranks = ranks.hint("shuffle_hash")
+        else:
+            ranks = superstep_state_side(ranks, n)
         contribs = links.join(ranks, links.src == ranks.v).select(
             "dst", (F.col("rank") * F.col("w")).alias("contrib")
         )
         if impl == "csr":
-            partials = contribs.mapInPandas(
+            contribs = contribs.mapInPandas(
                 _csr_partial_sums, "dst long, partial double"
-            )
-            sums = partials.groupBy("dst").agg(F.sum("partial").alias("mass"))
-        else:
-            sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("mass"))
-        if pvec is None:
-            base = (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping / n) * dangling_mass_col
-            )
-            sv = static.select("v")
+            ).withColumnRenamed("partial", "contrib")
+        msgs = contribs.select(
+            F.col("dst").alias("v"),
+            "contrib",
+            F.lit(None).cast("double").alias("rank0"),
+        )
+        own = start.select(
+            "v", F.lit(0.0).alias("contrib"), F.col("rank").alias("rank0")
+        )
+        sums = (
+            msgs.unionByName(own)
+            .groupBy("v")
+            .agg(F.sum("contrib").alias("mass"), F.max("rank0").alias("rank0"))
+        )
+        dm = F.lit(dangling_mass)
+        if not personalized:
+            base = F.lit((1.0 - damping) / n) + F.lit(damping / n) * dm
         else:
             # restart and dangling mass both flow to the teleport vector
             base = (
                 F.lit(1.0 - damping) * F.col("p")
-                + F.lit(damping) * dangling_mass_col * F.col("p")
+                + F.lit(damping) * dm * F.col("p")
             )
-            sv = static.select("v", "p")
-        new_rank = base + F.lit(damping) * F.coalesce(F.col("mass"), F.lit(0.0))
-        return sv.join(sums, sv.v == sums.dst, "left").select(
-            "v", new_rank.alias("rank")
+        # (hinted: AQE would broadcast the small cached static table
+        # instead — one more job per superstep)
+        return static.join(sums.hint("shuffle_hash"), "v").select(
+            "v",
+            (base + F.lit(damping) * F.col("mass")).alias("rank"),
+            "rank0",
+            "dangling",
         )
 
-    # static per-vertex attributes, cached once — the anchor that keeps a
-    # chained block LINEAR: every lazy sub-iteration joins the new mass
-    # against this cached table (never against the previous lazy state, a
-    # second reference to which would double the uncached plan per step —
-    # measured as 2^k blow-up)
-    static = state0.select("v", "dangling")
-    if pvec is not None:
-        static = static.join(pvec, "v")
-    static = static.repartition("v").persist()
-    # (hash-partitioned on v so the per-sub-iteration full-vertex left join
-    # reuses the cached layout instead of re-exchanging every superstep;
-    # the cache materializes with the first superstep's join)
-    effective_block = block_size if not has_dangling else 1
     # with dangling vertices the per-step mass depends on the previous
     # state twice (contributions + dangling sum), which cannot be chained
     # lazily without recomputation; fall back to one action per superstep
+    effective_block = block_size if not n_dangling else 1
 
-    def step(state: DataFrame, i: int):
-        cur = state.select("v", "rank")
-        for j in range(effective_block):
-            dmass = F.lit(carried["dangling_mass"]) if j == 0 else F.lit(0.0)
-            # (dangling graphs have effective_block == 1, so the literal
-            # carried mass is always current)
-            cur = _one_superstep(cur, dmass)
-        block_start = state.select("v", F.col("rank").alias("rank0"))
-        new_state = (
-            cur.join(block_start, "v")
-            .join(static, "v")
-            .select(
-                "v",
-                "rank",
-                F.abs(F.col("rank") - F.col("rank0")).alias("delta"),
-                "dangling",
-            )
-            .persist()
+    def step(state: DataFrame, i: int, observed: dict | None):
+        dangling_mass = (
+            dangling_mass0 if observed is None else observed["dmass"] or 0.0
         )
-        agg = new_state.agg(
-            F.sum("delta").alias("l1"),
-            F.sum(F.when(F.col("dangling"), F.col("rank"))).alias("dmass"),
-            F.count("*").alias("rows"),
-        ).collect()[0]
-        carried["dangling_mass"] = agg["dmass"] or 0.0
-        return new_state, float(agg["l1"]), int(agg["rows"])
+        cur = state
+        for _ in range(effective_block):
+            # (a block > 1 has no dangling vertex: its mass stays 0)
+            cur = _one_superstep(cur, state, dangling_mass)
+        new_state = cur.select(
+            "v",
+            "rank",
+            F.abs(F.col("rank") - F.col("rank0")).alias("delta"),
+            "dangling",
+        )
+        return new_state, {
+            "delta": F.sum("delta"),
+            "dmass": F.sum(F.when(F.col("dangling"), F.col("rank"))),
+        }
 
-    import math as _math
-
-    n_blocks = _math.ceil(max_iter / effective_block)
     result = iterate(
         state0,
         step,
-        max_iter=n_blocks,
+        max_iter=math.ceil(max_iter / effective_block),
         tol=tol,
         checkpointer=checkpointer,
         start_iteration=start_iteration,
@@ -278,7 +270,6 @@ def pagerank(
     )
     out = result.state.select("v", F.col("rank").alias("pagerank"))
     links.unpersist()
-    verts.unpersist()
     static.unpersist()
     if include_metrics:
         return out, result

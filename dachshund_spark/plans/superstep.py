@@ -1,22 +1,26 @@
 """Superstep driver loop with lineage control, per-superstep checkpoints,
 and metrics — the iterative backbone under PageRank / connected components /
-label propagation / peeling.
+label propagation / eigenvector centrality.
 
 Spark has no native iterate-to-fixpoint, so iterative algorithms are driver
 loops where every iteration appends to the logical plan.  Unchecked, plan
-depth grows linearly and job setup cost dominates by iteration ~20 (and at
-cluster scale a lost executor replays the whole lineage).  The loop
-therefore:
+depth grows linearly, and at benchmark sizes the fixed cost of every
+Spark job (~0.1 s) dominates a round.  ``iterate`` therefore runs exactly
+ONE action per superstep:
 
-* truncates lineage every ``checkpoint_every`` supersteps — either via
-  durable parquet checkpoints (resumable across driver restarts; the
-  north-rule requirement) or ``localCheckpoint`` (fast, in-cluster),
-* records a metrics row per superstep (rows, delta, wall seconds,
-  partition count) next to the checkpoint so a resumed job knows exactly
-  where it stopped (per-partition lineage lives in the parquet footer +
-  metrics row),
-* supports resume: ``run`` starts from the latest durable checkpoint when
-  one exists for this job name.
+* the step builds the next state LAZILY and names its convergence
+  aggregates as Columns; the loop attaches them (plus a row count) with
+  ``DataFrame.observe`` at the top of the plan,
+* that plan's single action is either a durable parquet checkpoint write
+  (resumable across driver restarts; the north-rule requirement) or an
+  eager ``cut_lineage`` (fast, in-cluster) — the observed row (rows,
+  delta, and whatever else the step asked for) comes back from the same
+  job, so no round collects a separate aggregate,
+* every round therefore ends lineage-free, and the superseded state is
+  released at once,
+* a checkpoint's metrics sidecar is written after its parquet commit
+  (log-then-visible), so a resumed job knows exactly where it stopped
+  and never resumes from a torn write.
 
 The reference engine has no equivalent (single-process loops,
 transformer_base.rs:38-91); this is engine-side machinery our Spark design
@@ -32,7 +36,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
@@ -160,6 +165,8 @@ class SuperstepResult:
     iterations: int
     converged: bool
     metrics: list[SuperstepMetrics] = field(default_factory=list)
+    # the last round's observed row (rows, delta and the step's extras)
+    observed: dict | None = None
 
 
 class CheckpointManager:
@@ -167,8 +174,10 @@ class CheckpointManager:
 
     Layout: ``<root>/<name>/step=<k>/`` (parquet) plus
     ``<root>/<name>/step=<k>.metrics.json``.  A checkpoint is only
-    considered complete when the metrics sidecar exists (written after the
-    parquet commit), so a killed job can never resume from a torn write.
+    considered complete when the metrics sidecar exists.  ``write`` drops
+    any stale sidecar before the parquet write and ``commit`` writes the
+    sidecar only after the parquet commit (log-then-visible), so a killed
+    job can never resume from a torn write.
     """
 
     def __init__(self, root: str, name: str, fingerprint: str | None = None):
@@ -185,15 +194,34 @@ class CheckpointManager:
     def _step_path(self, step: int) -> str:
         return os.path.join(self.dir, f"step={step}")
 
-    def save(self, df: DataFrame, metrics: SuperstepMetrics) -> DataFrame:
-        path = self._step_path(metrics.superstep)
+    def write(self, df: DataFrame, step: int) -> str:
+        """Write ``df`` as step ``step``'s parquet (one Spark action) and
+        return its path.  The step stays invisible to ``latest`` until
+        ``commit``."""
+        path = self._step_path(step)
+        if os.path.exists(path + ".metrics.json"):
+            os.remove(path + ".metrics.json")
         df.write.mode("overwrite").parquet(path)
+        return path
+
+    def commit(self, metrics: SuperstepMetrics) -> None:
+        """Publish a written step: its metrics sidecar (with the
+        fingerprint), renamed into place so it is never seen half
+        written."""
+        path = self._step_path(metrics.superstep)
         payload = json.loads(metrics.to_json())
         if self.fingerprint is not None:
             payload["fingerprint"] = self.fingerprint
-        with open(path + ".metrics.json", "w") as f:
+        with open(path + ".metrics.json.tmp", "w") as f:
             f.write(json.dumps(payload))
-        return df.sparkSession.read.parquet(path)
+        os.replace(path + ".metrics.json.tmp", path + ".metrics.json")
+
+    def save(self, df: DataFrame, metrics: SuperstepMetrics) -> DataFrame:
+        """``write`` + ``commit`` for a caller whose metrics are known
+        before the write; returns the reread checkpoint."""
+        path = self.write(df, metrics.superstep)
+        self.commit(metrics)
+        return df.sparkSession.read.schema(df.schema).parquet(path)
 
     def latest(self) -> tuple[int, str] | None:
         steps = []
@@ -228,21 +256,47 @@ class CheckpointManager:
 
 def iterate(
     state: DataFrame,
-    step: Callable[[DataFrame, int], tuple[DataFrame, float]],
+    step: Callable[
+        [DataFrame, int, dict | None], tuple[DataFrame, dict[str, Column]]
+    ],
     max_iter: int,
     tol: float = 0.0,
     checkpoint_every: int = 3,
     checkpointer: CheckpointManager | None = None,
     start_iteration: int = 0,
 ) -> SuperstepResult:
-    """Run ``step(state, i) -> (new_state, delta[, rows])`` until
-    ``delta <= tol`` or ``max_iter``.  ``delta`` is the algorithm's
-    convergence measure (L1 score change, #changed labels, #removed
-    vertices...).  A step that already materialized its state may return
-    ``rows`` as a third element to avoid a redundant count action — at
-    cluster scale, extra per-superstep jobs are pure fixed overhead.
+    """Run ``step(state, i, observed) -> (next_state, aggregates)`` until
+    the observed ``delta <= tol`` or ``max_iter``.
 
-    The returned state is persisted; callers unpersist when done.
+    ``next_state`` is LAZY.  ``aggregates`` maps names to aggregate
+    Columns over it and must include ``"delta"``, the algorithm's
+    convergence measure (L1 score change, #changed labels...); the loop
+    adds ``"rows"``.  ``observed`` is the previous round's evaluated row
+    of those aggregates as a dict (None on the first round of this
+    call), so a step can carry scalars such as PageRank's dangling mass
+    or a frontier size into its next plan without a job of its own.
+
+    One Spark action per round: the loop attaches the aggregates with
+    ``DataFrame.observe`` at the TOP of ``next_state``'s plan and runs
+    either the durable checkpoint write (``checkpointer`` set and
+    ``i % checkpoint_every == 0`` or round ``max_iter``) or an eager
+    ``cut_lineage``.  A round that converges off that schedule is not
+    made durable: its delta is known only once its action has run.  The
+    checkpoint is reread with its known schema (no inference job, no
+    cache), and its sidecar is committed after the parquet.  Either way
+    every round ends lineage-free and the superseded state is released
+    at once.
+
+    Exactly-once condition: Spark applies observed metrics exactly once
+    only when the CollectMetrics node runs in the RESULT stage; in a
+    shuffle-map stage, a retried or reused stage counts again.  So no
+    Exchange may sit above the observe node.  Both actions here (a plain
+    parquet write, a local checkpoint) add none; a partitioned or
+    bucketed checkpoint write, or a repartition before the cut, would.
+
+    The returned state is a lineage-free leaf (a released-on-demand
+    local checkpoint or a parquet reread); the caller's initial state is
+    never released.
     """
     if start_iteration > 0 and start_iteration >= max_iter:
         # a resumed checkpoint already at/past the iteration bound would
@@ -253,70 +307,50 @@ def iterate(
             f"past max_iter={max_iter}; rerun with a larger --max-iter "
             "(or clear the checkpoint dir to restart from scratch)"
         )
-    state = state.persist()
-    state.count()
+    initial = state
     metrics: list[SuperstepMetrics] = []
-    # deferred-release window (same discipline as the SCC inner loop): a
-    # persist-only round's recompute lineage still reads its predecessors,
-    # so superseded states are freed only once a lineage-FREE successor —
-    # a cut_lineage leaf or a durable parquet reread — has materialized on
-    # top of them.  This replaces the old unpersist-immediately pattern,
-    # whose cut-leaf blocks were freed only when the JVM ContextCleaner
-    # happened to GC them (measured: driver heap accumulation across a
-    # 55-query gate run forced clearCache+gc between queries).
-    pending: list[DataFrame] = []
+    observed: dict | None = None
     converged = False
     i = start_iteration
     while i < max_iter:
         t0 = time.time()
-        out = step(state, i)
-        if len(out) == 3:
-            new_state, delta, rows = out
-            new_state = new_state.persist()
-        else:
-            new_state, delta = out
-            new_state = new_state.persist()
-            rows = new_state.count()
-        seconds = time.time() - t0
+        nxt, aggregates = step(state, i, observed)
+        obs = Observation()
+        nxt = nxt.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            *(col.alias(name) for name, col in aggregates.items()),
+        )
         i += 1
+        durable = checkpointer is not None and (
+            i % checkpoint_every == 0 or i == max_iter
+        )
+        if durable:
+            path = checkpointer.write(nxt, i)
+            nxt = nxt.sparkSession.read.schema(nxt.schema).parquet(path)
+        else:
+            nxt = cut_lineage(nxt)
+        observed = obs.get
         m = SuperstepMetrics(
             superstep=i,
-            rows=rows,
-            delta=float(delta),
-            seconds=round(seconds, 4),
-            partitions=new_state.rdd.getNumPartitions(),
+            rows=int(observed["rows"]),
+            delta=float(observed["delta"] or 0.0),
+            seconds=round(time.time() - t0, 4),
+            partitions=nxt.rdd.getNumPartitions(),
         )
+        if durable:
+            checkpointer.commit(m)
         metrics.append(m)
-        sealed = False
-        if checkpointer is not None and (
-            i % checkpoint_every == 0 or delta <= tol or i == max_iter
-        ):
-            reread = checkpointer.save(new_state, m)
-            new_state.unpersist()
-            new_state = reread.persist()
-            new_state.count()
-            sealed = True  # parquet reread carries no lineage
-        elif i % checkpoint_every == 0 or delta <= tol or i == max_iter:
-            # lineage cut without durability (stats reset included); also
-            # seals the final round so the returned state never drags a
-            # window of superseded predecessors behind it
-            cut = cut_lineage(new_state)
-            new_state.unpersist()
-            new_state = cut
-            sealed = True
-        if sealed:
-            # the lineage-free successor is materialized: every older
-            # state in the window is unreachable from anything live
-            for p in pending:
-                release(p)
-            pending.clear()
+        if state is not initial:
             release(state)
-        else:
-            pending.append(state)
-        state = new_state
-        if delta <= tol:
+        state = nxt
+        if m.delta <= tol:
             converged = True
             break
     return SuperstepResult(
-        state=state, iterations=i, converged=converged, metrics=metrics
+        state=state,
+        iterations=i,
+        converged=converged,
+        metrics=metrics,
+        observed=observed,
     )
